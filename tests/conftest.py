@@ -4,6 +4,10 @@ from zuliasearch_spark.config import FieldConfig, IndexAs, IndexConfig
 from zuliasearch_spark.indexing.corpus import gen_corpus_pandas
 
 
+def pytest_configure(config):
+    config.addinivalue_line("markers", "slow: drives a Spark engine end to end (deselect with -m 'not slow')")
+
+
 def code_config(num_shards: int = 1, **kw) -> IndexConfig:
     """FIXTURES.md F2 index config: code corpus, camel/snake-aware."""
     return IndexConfig(

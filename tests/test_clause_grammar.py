@@ -105,7 +105,7 @@ def test_clause_phrase_grammar(engine):
 
 
 def test_clause_should_range_mixed_tree(engine):
-    # doc-values leaf in SHOULD position inside clause q: set-algebra path
+    # doc-values leaf in SHOULD position inside clause q: a kernel mask
     out = engine.search(
         SearchRequest((C("SCORE_SHOULD", q="alpha OR year>2015"),), amount=10)
     )
@@ -197,9 +197,8 @@ def test_resolve_clause_rejects_grammar_text():
 
 def test_search_many_routes_docvalues_requests(engine):
     """Batch API: requests whose resolved tree carries doc-values
-    leaves (range conjuncts or SHOULD-position points) no longer
-    raise — they route through the per-request planner while pure
-    postings requests stay in the one batched kernel job."""
+    leaves (range conjuncts or SHOULD-position points) run in the one
+    batched kernel job next to pure postings requests."""
     reqs = {
         "plain": SearchRequest(qs="alpha", qf=("text",), amount=10),
         "ranged": SearchRequest(qs="alpha AND year:[2005 TO 2020]", qf=("text",), amount=10),

@@ -38,6 +38,9 @@ def engine(spark):
             FieldConfig("altTitle", index_as=(IndexAs("altTitle", "whitespace_lc"),)),
             FieldConfig("altTitle2", index_as=(IndexAs("altTitle2", "whitespace_lc"),)),
             FieldConfig("docLanguage", index_as=(IndexAs("docLanguage", "lcKeyword"),)),
+            # point-typed index fields: configured, stored as doc values
+            FieldConfig("isParent"),
+            FieldConfig("parentDocId"),
         ),
         # FieldWildcardTest's mappings: title -> altTitle+docTitle,
         # title2 -> *Title pattern, altTitle -> altTitle2 includeSelf
@@ -49,7 +52,8 @@ def engine(spark):
     )
     # isParent (BOOL index) + parentDocId (INT index) mirror the
     # reference corpus — in this engine point-typed fields are stored
-    # doc-values columns probed at resolution time
+    # doc-values columns, declared by a FieldConfig and probed at
+    # resolution time
     rows = [
         ("1", "1", "Search Blog", "Discover Blog", "Something else totally", ["en", "fr"], True, None),
         ("2", "2", "Spring Boot Blog", "Bouncy Blog", None, ["en", "fr"], True, None),
@@ -149,3 +153,33 @@ def test_alias_expansion_unchanged(engine):
     # anchored: *Title does NOT match altTitle2 (FieldWildcardTest's
     # title2 mapping covers altTitle + docTitle only)
     assert set(cfg2.expand_field("title2")) == {"docTitle", "altTitle"}
+
+
+def test_bare_patterns_skip_ids_and_unconfigured_columns(spark):
+    # a numeric uniqueId and a stored column no FieldConfig declares
+    # both hold 2016; getMatchingIndexFields expands patterns over
+    # configured index fields only, so *:2016 matches neither
+    cfg = IndexConfig(
+        index_name="wildcard_ids",
+        unique_id_col="uniqueId",
+        number_of_shards=1,
+        default_search_fields=("docTitle",),
+        field_configs=(
+            FieldConfig("docTitle", index_as=(IndexAs("docTitle", "whitespace_lc"),)),
+            FieldConfig("year"),
+        ),
+    )
+    df = spark.createDataFrame(
+        [(2016, "alpha", 2000, 2016), (7, "beta", 2016, 1)],
+        "uniqueId int, docTitle string, year int, stored int",
+    )
+    tables = build_index(df, cfg, stored_cols=("year", "stored")).persist()
+    try:
+        eng = SearchEngine(tables)
+        res = eng.search_string("*:2016", amount=10)
+        assert res["totalHits"] == 1  # the configured year field only
+        assert [t["uniqueId"] for t in res["topk"]] == ["7"]
+        assert _hits(eng, "*:2000") == 1
+        assert _hits(eng, "*:1") == 0  # unconfigured column
+    finally:
+        tables.unpersist()

@@ -1,9 +1,10 @@
 """Property test for mixed-position doc-values trees: random nested
 boolean queries (terms + year ranges anywhere, OR-groups with mm,
-AND-groups, AND NOT wraps) evaluated by the engine
-(`executor._match_tree_mixed` or the conjunct fast path — whichever
-the shape selects) must return exactly the doc set a brute-force
-Python evaluator computes over the corpus.
+AND-groups, AND NOT wraps) run as ONE ``search_many`` batch together
+with pure-postings requests. Every doc-values leaf of the batch is a
+per-shard mask inside the batch kernel, so each request must return
+exactly the doc set a brute-force Python evaluator computes over the
+corpus, with or without deleted docs.
 
 The generated grammar is restricted to shapes whose query-string
 parse is unambiguous ("(a OR b)@m", "(a AND b)", "(a AND NOT b)"),
@@ -19,12 +20,13 @@ import pytest
 from zuliasearch_spark.config import FieldConfig, IndexAs, IndexConfig
 from zuliasearch_spark.indexing.builder import build_index
 from zuliasearch_spark.search.executor import SearchEngine
+from zuliasearch_spark.search.query import SearchRequest
 
 WORDS = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta"]
+DELETED = ("2", "5", "11", "17", "20")
 
 
-@pytest.fixture(scope="module")
-def corpus_engine(spark):
+def _corpus_engine(spark):
     rng = random.Random(1234)
     rows = []
     for i in range(24):
@@ -45,7 +47,21 @@ def corpus_engine(spark):
         spark.createDataFrame(pdf), cfg, stored_cols=("year",)
     ).persist()
     docs = {uid: (set(text.split()), year) for uid, text, year in rows}
-    yield SearchEngine(tables), docs
+    return SearchEngine(tables), docs, tables
+
+
+@pytest.fixture(scope="module")
+def corpus_engine(spark):
+    eng, docs, tables = _corpus_engine(spark)
+    yield eng, docs
+    tables.unpersist()
+
+
+@pytest.fixture(scope="module")
+def deleted_engine(spark):
+    eng, docs, tables = _corpus_engine(spark)
+    assert eng.delete_by_unique_ids(list(DELETED)) == len(DELETED)
+    yield eng, {u: d for u, d in docs.items() if u not in DELETED}
     tables.unpersist()
 
 
@@ -87,17 +103,42 @@ def _gen(rng, depth):
     return q, lambda d, p=pos[1], n=neg[1]: p(d) and not n(d)
 
 
+# pure-postings requests riding in every batch
+POSTINGS = (
+    ("text:alpha", lambda d: "alpha" in d[0]),
+    ("text:beta OR text:gamma", lambda d: bool({"beta", "gamma"} & d[0])),
+    ("text:delta AND NOT text:zeta", lambda d: "delta" in d[0] and "zeta" not in d[0]),
+)
+
+
+def _batch(seed):
+    rng = random.Random(seed)
+    cases = [_gen(rng, depth=2) for _ in range(14)] + list(POSTINGS)
+    return {f"q{i}": c for i, c in enumerate(cases)}
+
+
+def _check_batch(eng, docs, seed):
+    cases = _batch(seed)
+    reqs = {qid: SearchRequest(qs=q, amount=50) for qid, (q, _) in cases.items()}
+    got = eng.search_many(reqs)
+    for qid, (q, f) in cases.items():
+        expect = {uid for uid, d in docs.items() if f(d)}
+        res = got[qid]
+        ids = {t["uniqueId"] for t in res["topk"]}
+        assert res["totalHits"] == len(expect), (q, sorted(expect), sorted(ids))
+        assert ids == expect, (q, sorted(expect - ids), sorted(ids - expect))
+    return reqs, got
+
+
 @pytest.mark.parametrize("seed", [3, 17, 99])
 def test_random_mixed_trees_match_brute_force(corpus_engine, seed):
     eng, docs = corpus_engine
-    rng = random.Random(seed)
-    checked = 0
-    for _ in range(14):
-        q, f = _gen(rng, depth=2)
-        expect = {uid for uid, d in docs.items() if f(d)}
-        res = eng.search_string(q, amount=50)
-        got = {t["uniqueId"] for t in res["topk"]}
-        assert res["totalHits"] == len(expect), (q, sorted(expect), sorted(got))
-        assert got == expect, (q, sorted(expect - got), sorted(got - expect))
-        checked += 1
-    assert checked == 14
+    _check_batch(eng, docs, seed)
+
+
+@pytest.mark.parametrize("seed", [3, 17])
+def test_random_mixed_trees_with_deletes(deleted_engine, seed):
+    eng, docs = deleted_engine
+    reqs, got = _check_batch(eng, docs, seed)
+    for res in got.values():
+        assert not {t["uniqueId"] for t in res["topk"]} & set(DELETED)

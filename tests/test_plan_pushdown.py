@@ -58,9 +58,7 @@ def parquet_engine(spark, tmp_path_factory):
 def test_range_predicate_pushes_to_parquet(parquet_engine):
     from zuliasearch_spark.search.parser import RRange
 
-    pred = parquet_engine._range_predicate(
-        [("MUST", RRange(("n",), "5", "9", True, True))]
-    )
+    pred = parquet_engine._range_predicate(RRange(("n",), "5", "9", True, True))
     df = parquet_engine.tables.doc_map.filter(pred)
     pushed = _pushed_filters(df)
     assert "GreaterThanOrEqual(n,5)" in pushed and "LessThanOrEqual(n,9)" in pushed, (
@@ -72,9 +70,7 @@ def test_range_predicate_pushes_to_parquet(parquet_engine):
 def test_numeric_set_predicate_pushes_to_parquet(parquet_engine):
     from zuliasearch_spark.search.parser import RNumericSet
 
-    pred = parquet_engine._range_predicate(
-        [("MUST", RNumericSet(("n",), ("5", "7")))]
-    )
+    pred = parquet_engine._range_predicate(RNumericSet(("n",), ("5", "7")))
     pushed = _pushed_filters(parquet_engine.tables.doc_map.filter(pred))
     assert "In(n" in pushed, f"IN set must push, got [{pushed}] for {pred!r}"
 
@@ -94,9 +90,7 @@ def test_positive_range_drops_nulls(parquet_engine):
 def test_alias_or_expansion_still_pushes(parquet_engine):
     from zuliasearch_spark.search.parser import RRange
 
-    pred = parquet_engine._range_predicate(
-        [("MUST", RRange(("n", "n"), "5", None, True, True))]
-    )
+    pred = parquet_engine._range_predicate(RRange(("n", "n"), "5", None, True, True))
     pushed = _pushed_filters(parquet_engine.tables.doc_map.filter(pred))
     assert "GreaterThanOrEqual(n,5)" in pushed
 
@@ -116,3 +110,33 @@ def test_postings_scan_prunes_positions(parquet_engine):
     # stronger than row-group min-max), else as a PushedFilter
     pf = re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert "field" in (_pushed_filters(scan) + " ".join(pf))
+
+
+def test_batch_kernel_pushes_dv_predicates(parquet_engine, monkeypatch):
+    # doc-values leaves ride in the batch kernel job as mask columns;
+    # their bare comparisons must still reach the doc_map parquet scan
+    from zuliasearch_spark.search.query import SearchRequest
+
+    frames = []
+    df_cls = type(parquet_engine.tables.doc_map)
+    orig = df_cls.toPandas
+
+    def capture(df):
+        frames.append(df)
+        return orig(df)
+
+    monkeypatch.setattr(df_cls, "toPandas", capture)
+    try:
+        res = parquet_engine.search_many(
+            {
+                "range": SearchRequest(qs="content:alpha AND n:[5 TO 9]", amount=10),
+                "set": SearchRequest(qs="content:alpha OR n:zl:ns(20)", amount=10),
+            },
+            fetch="none",
+        )
+    finally:
+        monkeypatch.undo()
+    assert res["range"]["totalHits"] == 2 and res["set"]["totalHits"] == 4
+    pushed = _pushed_filters(frames[0])
+    assert "GreaterThanOrEqual(n,5)" in pushed and "LessThanOrEqual(n,9)" in pushed, pushed
+    assert "EqualTo(n,20)" in pushed or "In(n" in pushed, pushed

@@ -101,14 +101,6 @@ _EXCEPTIONS_POST_1A = frozenset(
 )
 
 
-def _is_vowel(word: str, i: int) -> bool:
-    c = word[i]
-    if c in "aeiou":
-        return True
-    # 'y': vowel unless marked consonant 'Y'
-    return c == "y"
-
-
 def _regions(word: str) -> tuple[int, int]:
     """(r1, r2) start offsets per the spec, with the gener-/commun-/
     arsen- prefix special case."""

@@ -585,20 +585,6 @@ def stats_from_postings(postings: DataFrame) -> tuple[DataFrame, DataFrame]:
     return term_stats, field_stats
 
 
-def tokenize_all(base: DataFrame, config: IndexConfig) -> DataFrame:
-    """corpus(+shard,doc_id) → tall (field, shard, doc_id, term, tf, dl)."""
-    field_specs = [
-        (stored_col, ia.indexed_field_name, config.analyzer(ia.analyzer_name))
-        for stored_col, ia in config.indexed_fields()
-    ]
-    if not field_specs:
-        raise ValueError("index config has no indexed fields")
-    cols = list(dict.fromkeys(c for c, _, _ in field_specs))
-    return base.select("shard", "doc_id", *cols).mapInArrow(
-        _make_tokenizer(field_specs, config.store_positions), TALL_SCHEMA
-    )
-
-
 def build_postings(tall: DataFrame, config: IndexConfig) -> DataFrame:
     bucket_shift = int(np.log2(config.docs_per_bucket))
     tall_b = tall.withColumn("bucket", F.shiftright("doc_id", bucket_shift).cast("long"))

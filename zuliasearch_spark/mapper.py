@@ -257,9 +257,6 @@ class Mapper:
             out[name] = v
         return out
 
-    def unique_id_of(self, obj) -> str:
-        return getattr(obj, self.unique_id_attr)
-
     # -- document -> object (fromDocument) -------------------------------
 
     def from_document(self, doc: dict):

@@ -27,10 +27,16 @@ SURVEY.md §3.1) re-expressed for Spark:
 **Batch execution** (`search_many`): N queries run as ONE Spark job —
 one pushdown scan over the union of all query terms, one shuffle, one
 kernel invocation per shard that scores every query against the
-decoded blocks (decode is shared across queries). At cluster scale
-this amortizes job/scan/shuffle overhead across the query stream,
-which is how a Spark engine matches a serving engine's throughput:
-queries/sec, not per-query latency.
+decoded blocks (decode is shared across queries). Doc-values leaves
+(ranges, numeric sets, geo) of every query, in any boolean position,
+join the same job: each distinct leaf predicate becomes one boolean
+column of a narrow, pushdown-filtered doc_map projection, cogrouped by
+shard with the postings, and the kernel evaluates the leaf as that
+shard's allowed-doc mask with score 0.0 (the IndexOrDocValuesQuery
+split, SetQueryHelper.java:45-106). At cluster scale this amortizes
+job/scan/shuffle overhead across the query stream, which is how a
+Spark engine matches a serving engine's throughput: queries/sec, not
+per-query latency.
 
 **Block-max pruning** (`SearchRequest.block_max_pruning=True`): the
 Spark re-expression of Lucene's WAND/MAXSCORE skipping that the
@@ -75,7 +81,7 @@ from pyspark.sql import functions as F
 
 from zuliasearch_spark.analysis.analyzers import analyze_query_text
 from zuliasearch_spark.config import QUANT_LEVELS, IndexConfig
-from zuliasearch_spark.indexing.builder import IndexTables
+from zuliasearch_spark.indexing.builder import IndexTables, stats_from_postings
 from zuliasearch_spark.indexing.tombstones import load_tombstone_uids, save_tombstone_uids
 from zuliasearch_spark.search.intervals import doc_candidates as interval_doc_candidates
 from zuliasearch_spark.search.intervals import eval_tree as eval_interval_tree
@@ -83,24 +89,20 @@ from zuliasearch_spark.search.matcher import combine_clauses, evaluate_tree
 from zuliasearch_spark.search.parser import ExistsSpec as _ExistsSpecT
 from zuliasearch_spark.search.parser import RGeo as _RGeoT
 from zuliasearch_spark.search.parser import RNumericSet as _RNumericSetT
-from zuliasearch_spark.search.parser import RRange as RRangeT
 from zuliasearch_spark.search.parser import (
+    DV_LEAVES,
     MUST as _MUST,
     MUST_NOT as _MUST_NOT,
     SHOULD as _SHOULD,
-    ParseError,
     RBool,
     RLeaf,
     apply_global_mm,
     parse_query,
     resolve_tree,
-    strip_ranges as _strip_ranges,
+    tree_dv_leaves,
     tree_has_positive_leaf,
-    tree_ranges,
     tree_stat_keys,
 )
-
-_TREE_SENTINEL = "\x00tree\x00"  # cache key for a pre-stripped AST
 
 
 def _require_nonzero_query_vector(vector) -> None:
@@ -731,12 +733,16 @@ def _subset_term_vectors(store, n_sub, shard, idf_by_key, avgdl_by_key, params, 
     return term_vectors
 
 
-def _dense_term_vectors(store, n, shard, idf_by_key, avgdl_by_key, params, sims=None):
+def _dense_term_vectors(store, n, shard, idf_by_key, avgdl_by_key, params, sims=None, dv_masks=None):
     sims = sims or {}
 
     def term_vectors(spec, boost: float) -> tuple[np.ndarray, np.ndarray]:
         mask = np.zeros(n, dtype=bool)
         score = np.zeros(n, dtype=np.float64)
+        if isinstance(spec, DV_LEAVES):
+            # doc-values leaf: the shard's allowed-doc mask, score 0.0
+            # (a copy: the root match is tombstoned in place)
+            return dv_masks[spec].copy(), score
         if isinstance(spec, _ExistsSpecT):
             # field:* — constant-score over the norms stream
             # (FieldExistsQuery semantics)
@@ -982,6 +988,30 @@ def _apply_tombstones(match: np.ndarray, deleted) -> None:
         match[d] = False
 
 
+def _shard_doc_space(n_docs_by_shard, shard: int, store: PostingsStore) -> int:
+    """Size of one shard's dense doc space: its doc count, else the
+    highest doc id its postings mention, plus one."""
+    n = n_docs_by_shard.get(shard, 0)
+    if n == 0 and store.blocks_total:
+        n = int(store.last_doc.max()) + 1
+    return n
+
+
+def _shard_dv_masks(dv_pdf, dv_cols: dict, n: int) -> dict:
+    """leaf → bool[n] allowed-doc mask of one shard, from the shard's
+    rows of the doc-values mask frame (one boolean column per distinct
+    leaf predicate; a doc without a row matches no leaf)."""
+    if not dv_cols:
+        return {}
+    docs = dv_pdf["doc_id"].to_numpy(dtype=np.int64)
+    by_col = {}
+    for col in set(dv_cols.values()):
+        m = np.zeros(n, dtype=bool)
+        m[docs[dv_pdf[col].to_numpy(dtype=bool)]] = True
+        by_col[col] = m
+    return {leaf: by_col[col] for leaf, col in dv_cols.items()}
+
+
 def _run_query_on_shard(
     plan: _QueryPlan,
     store: PostingsStore,
@@ -991,8 +1021,10 @@ def _run_query_on_shard(
     avgdl_by_key,
     params: Bm25Params,
     deleted=None,
+    dv_masks=None,
 ):
-    """Execute one request against one shard's postings.
+    """Execute one request against one shard's postings and doc-values
+    masks.
 
     Returns (top_docs, top_scores, total_hits, has_next, next_score,
     hits_exact).
@@ -1009,7 +1041,7 @@ def _run_query_on_shard(
             return result
 
     # dense path: exact totalHits, exact top-k
-    tv = _dense_term_vectors(store, n, shard, idf_by_key, avgdl_by_key, params, dict(plan.sims))
+    tv = _dense_term_vectors(store, n, shard, idf_by_key, avgdl_by_key, params, dict(plan.sims), dv_masks)
     if plan.tree is not None:
         match, total = evaluate_tree(plan.tree, tv, n, params.lucene_parity)
     else:
@@ -1126,28 +1158,30 @@ def _make_batch_kernel(
     params: Bm25Params,
     n_docs_by_shard: dict[int, int],
     tombstones: dict[int, "np.ndarray"] | None = None,
+    dv_cols: dict | None = None,
 ):
-    """Per-shard kernel scoring EVERY request against the decoded blocks."""
+    """Per-shard kernel scoring EVERY request against the decoded blocks
+    and the shard's doc-values masks (``dv_pdf``: its rows of the mask
+    frame, columns named by ``dv_cols``; None without dv leaves)."""
 
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(key, pdf: pd.DataFrame, dv_pdf: pd.DataFrame | None) -> pd.DataFrame:
         shard = int(key[0])
         store = PostingsStore(pdf)
-        n = n_docs_by_shard.get(shard, 0)
+        n = _shard_doc_space(n_docs_by_shard, shard, store)
         if n == 0:
-            if store.blocks_total == 0:
-                return pd.DataFrame(
-                    columns=[
-                        "qid", "shard", "doc_id", "score", "total_hits",
-                        "next_score", "has_next", "hits_exact",
-                        "blocks_decoded", "blocks_total",
-                    ]
-                )
-            n = int(store.last_doc.max()) + 1
+            return pd.DataFrame(
+                columns=[
+                    "qid", "shard", "doc_id", "score", "total_hits",
+                    "next_score", "has_next", "hits_exact",
+                    "blocks_decoded", "blocks_total",
+                ]
+            )
+        dv_masks = _shard_dv_masks(dv_pdf, dv_cols, n)
         deleted = (tombstones or {}).get(shard)
         frames = []
         for plan in plans:
             top, tscores, total_hits, has_next, next_score, hits_exact = _run_query_on_shard(
-                plan, store, shard, n, idf_by_key, avgdl_by_key, params, deleted
+                plan, store, shard, n, idf_by_key, avgdl_by_key, params, deleted, dv_masks
             )
             frames.append(
                 pd.DataFrame(
@@ -1197,6 +1231,7 @@ def _make_match_kernel(
     n_docs_by_shard: dict[int, int],
     tombstones: dict[int, "np.ndarray"] | None = None,
     tree: "RBool | None" = None,
+    dv_cols: dict | None = None,
 ):
     """Kernel variant emitting the FULL match set (for facets/stats).
 
@@ -1213,15 +1248,16 @@ def _make_match_kernel(
         }
     )
 
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(key, pdf: pd.DataFrame, dv_pdf: pd.DataFrame | None) -> pd.DataFrame:
         shard = int(key[0])
         store = PostingsStore(pdf)
-        if store.blocks_total == 0:
-            return empty
-        n = n_docs_by_shard.get(shard, 0)
+        n = _shard_doc_space(n_docs_by_shard, shard, store)
         if n == 0:
-            n = int(store.last_doc.max()) + 1
-        tv = _dense_term_vectors(store, n, shard, idf_by_key, avgdl_by_key, params)
+            return empty
+        tv = _dense_term_vectors(
+            store, n, shard, idf_by_key, avgdl_by_key, params,
+            dv_masks=_shard_dv_masks(dv_pdf, dv_cols, n),
+        )
         if tree is not None:
             match, total = evaluate_tree(tree, tv, n, params.lucene_parity, root_fixup=False)
         else:
@@ -1413,6 +1449,7 @@ class SearchEngine:
             all_fields=tuple(
                 dict.fromkeys(ia.indexed_field_name for _, ia in self.config.indexed_fields())
             ),
+            pattern_point_fields=self._pattern_point_fields(),
         )
 
     def _clauses_to_tree(self, req: SearchRequest) -> RBool:
@@ -1422,7 +1459,8 @@ class SearchEngine:
         BooleanQuery with its occur). Occur map: SCORE_MUST→MUST,
         SCORE_SHOULD→SHOULD, FILTER/TERMS→MUST with scores zeroed
         (Lucene FILTER occur contributes no score — boost 0.0 on the
-        subtree root), FILTER_NOT/TERMS_NOT→MUST_NOT."""
+        subtree root), FILTER_NOT/TERMS_NOT→MUST_NOT. Every subtree
+        root is an RBool, so the occur's boost always applies."""
         from zuliasearch_spark.search.query import (
             FILTER as _FILTER_T,
             SCORE_SHOULD as _SHOULD_T,
@@ -1440,6 +1478,10 @@ class SearchEngine:
                     expand=self.config.expand_field,
                 )
                 sub = _resolved_clause_to_tree(rc)
+            if not isinstance(sub, RBool):
+                # a bare leaf (e.g. a doc-values range) carries no
+                # boost: wrap it so the occur's boost applies
+                sub = RBool(((_MUST, sub),))
             if c.type in (_FILTER_T, _TERMS_T) or c.negative:
                 sub.boost = 0.0  # filter occur: match only, no score
             else:
@@ -1474,6 +1516,16 @@ class SearchEngine:
             self._date_fields_cache = got
         return got
 
+    def _pattern_point_fields(self) -> frozenset[str]:
+        """Point fields a bare field PATTERN probes: the
+        :meth:`_date_fields` columns a FieldConfig declares, never the
+        uniqueId column — getMatchingIndexFields expands only over
+        configured index fields, so ``*:2016`` cannot hit ids or
+        stored passthrough columns."""
+        declared = {fc.stored_field_name for fc in self.config.field_configs}
+        declared.discard(self.config.unique_id_col)
+        return self._date_fields() & declared
+
     def _resolve(self, req: SearchRequest) -> list[ResolvedClause]:
         # requests are frozen/hashable: cache clause resolution — a
         # repeating query stream (the serving case) pays analysis once
@@ -1492,12 +1544,16 @@ class SearchEngine:
 
     def _collect_term_stats(self, specs: set[tuple[str, str]]) -> dict[tuple[str, str, int], int]:
         """df per (field, term, shard) for the query leaves (pruned
-        scan of only terms not already cached)."""
+        scan of only terms not already cached). Pinned, the same
+        Σ n aggregates the resident postings: they are partitioned by
+        shard already, so the aggregate needs no shuffle — one job,
+        where a segmented index's derived term_stats table takes two."""
         specs = {(f, t) for f, t in specs if t is not None}  # exists keys need no df
         missing = specs - self._known_terms
         if missing:
             cond = self._specs_condition(missing)
-            for r in self.tables.term_stats.filter(cond).collect():
+            stats = self.tables.term_stats if self._pinned is None else stats_from_postings(self._pinned)[0]
+            for r in stats.filter(cond).collect():
                 self._df_cache[(r["field"], r["term"], int(r["shard"]))] = int(r["df"])
             self._known_terms |= missing
         return self._df_cache
@@ -1595,6 +1651,53 @@ class SearchEngine:
         if not need_positions and "pos_bytes" in scan.columns:
             scan = scan.select(*[c for c in scan.columns if c != "pos_bytes"])
         return scan
+
+    def _dv_mask_frame(self, trees):
+        """Doc-values leaves of ``trees`` as per-shard allowed-doc masks
+        for the kernel — the IndexOrDocValuesQuery split
+        (SetQueryHelper.java:45-106) with the doc-values side evaluated
+        next to the postings, so a range / numeric-set / geo leaf
+        composes in any boolean position like any other scorer.
+
+        One ``coalesce(<predicate>, false)`` column per distinct leaf
+        predicate (deduplicated by its SQL text) over a narrow
+        ``(shard, doc_id, <leaf fields>)`` projection of doc_map. The
+        row filter is the bare OR of the predicates, so the comparisons
+        still reach the parquet scan as PushedFilters and only docs
+        matching some leaf leave it. Only this side is shuffled: the
+        pinned postings (:meth:`pin`) are already partitioned by shard.
+        Returns ``(leaf → column, frame)``, or
+        ``({}, None)`` when no tree has a doc-values leaf."""
+        col_by_sql: dict[str, str] = {}
+        dv_cols: dict = {}
+        for tree in trees:
+            for leaf in tree_dv_leaves(tree):
+                if leaf not in dv_cols:
+                    sql = self._range_predicate(leaf)
+                    dv_cols[leaf] = col_by_sql.setdefault(sql, f"_dv{len(col_by_sql)}")
+        if not dv_cols:
+            return {}, None
+        doc_map = self.tables.doc_map
+        used = sorted({f for leaf in dv_cols for f in leaf.fields if f in doc_map.columns})
+        frame = (
+            doc_map.select("shard", "doc_id", *[F.col(f"`{f}`") for f in used])
+            .filter(" OR ".join(col_by_sql))
+            .select(
+                "shard", "doc_id",
+                *[F.expr(f"coalesce({sql}, false)").alias(c) for sql, c in col_by_sql.items()],
+            )
+        )
+        return dv_cols, frame
+
+    @staticmethod
+    def _apply_kernel(scan, dv_frame, kernel, schema: str):
+        """One kernel group per shard: the postings scan grouped by
+        shard, cogrouped with the doc-values mask frame when there is
+        one — every shard with postings or a doc-values match gets a
+        group."""
+        if dv_frame is None:
+            return scan.groupBy("shard").applyInPandas(lambda key, pdf: kernel(key, pdf, None), schema)
+        return scan.groupBy("shard").cogroup(dv_frame.groupBy("shard")).applyInPandas(kernel, schema)
 
     def _shards(self) -> list[int]:
         return sorted(self._shard_counts)
@@ -1710,7 +1813,7 @@ class SearchEngine:
         import time as _time
 
         t0 = _time.perf_counter_ns()
-        out = self._search_one(req, fetch)
+        out = self.search_many({"q": req}, fetch=fetch)["q"]
         load_ns = _time.perf_counter_ns() - t0
         out["fullyCached"] = False
         out["shardsCached"] = 0
@@ -1776,6 +1879,11 @@ class SearchEngine:
     ) -> dict[str, dict]:
         """Execute many requests in ONE Spark job (module docstring).
 
+        Doc-values leaves (ranges, numeric sets, geo) of every request,
+        in any boolean position, ride in the same job as per-shard
+        allowed-doc masks (:meth:`_dv_mask_frame`), so a batch costs
+        the same number of jobs with or without them.
+
         ``oversample=True`` reproduces the reference's shard request
         sizing: each shard is asked for only ``((k/numShards) +
         minShardRequest) · requestFactor`` hits instead of the full k
@@ -1792,39 +1900,18 @@ class SearchEngine:
         resolved_by_qid: dict[str, list[ResolvedClause]] = {}
         tree_by_qid: dict[str, "RBool | None"] = {}
         keys_by_qid: dict[str, set] = {}
-        dv_results: dict[str, dict] = {}
         for qid, r in reqs.items():
             resolved, tree = self._resolve_request(r)
-            if tree is not None:
-                # doc-values leaves (range conjuncts or nested/SHOULD
-                # positions) compose with doc_map scans rather than the
-                # batch postings kernel: run those requests through the
-                # per-request router and batch the rest. One extra job
-                # per dv-bearing request — the common serving stream is
-                # pure postings queries, which all stay in ONE job.
-                try:
-                    has_dv = bool(tree_ranges(tree))
-                except ParseError:
-                    has_dv = True
-                if has_dv:
-                    dv_results[qid] = self._search_one(r, fetch)
-                    continue
             resolved_by_qid[qid] = resolved
             tree_by_qid[qid] = tree
             keys_by_qid[qid] = tree_stat_keys(tree) if tree is not None else iter_stat_keys(resolved)
-        if dv_results and not resolved_by_qid and not tree_by_qid:
-            return dv_results
-        reqs = {q: r for q, r in reqs.items() if q not in dv_results}
-        all_specs: set[tuple[str, str]] = set()
-        for ks in keys_by_qid.values():
-            all_specs |= ks
+        all_specs: set[tuple[str, str]] = set().union(*keys_by_qid.values())
         plan = self._plan(all_specs)
+        dv_cols, dv_frame = self._dv_mask_frame(t for t in tree_by_qid.values() if t is not None)
         results: dict[str, dict] = {}
-        if plan is None:
-            out = {qid: {"totalHits": 0, "topk": [], "hitsExact": True} for qid in reqs}
-            out.update(dv_results)
-            return out
-        idf_by_key, avgdl_by_key, cond = plan
+        if plan is None and dv_frame is None:
+            return {qid: {"totalHits": 0, "topk": [], "hitsExact": True} for qid in reqs}
+        idf_by_key, avgdl_by_key, cond = plan or ({}, {}, F.lit(False))
 
         # purely-negative queries take the MatchAll fix-up in the
         # gather (driver-side page from shard_counts) — their kernel
@@ -1875,7 +1962,8 @@ class SearchEngine:
             )
 
         kernel = _make_batch_kernel(
-            qplans, idf_by_key, avgdl_by_key, self.params, self._shard_counts, self._tombstone_arrays()
+            qplans, idf_by_key, avgdl_by_key, self.params, self._shard_counts,
+            self._tombstone_arrays(), dv_cols,
         )
         scan = self._postings_scan(
             cond,
@@ -1886,7 +1974,7 @@ class SearchEngine:
         import time as _time
 
         _t0 = _time.perf_counter()
-        pdf = scan.groupBy("shard").applyInPandas(kernel, KERNEL_SCHEMA).toPandas()
+        pdf = self._apply_kernel(scan, dv_frame, kernel, KERNEL_SCHEMA).toPandas()
         _t_job = _time.perf_counter()
 
         # vectorized gather (QueryCombiner semantics in pandas C):
@@ -2004,7 +2092,6 @@ class SearchEngine:
         for res in results.values():
             for t in res["topk"]:
                 t.pop("qid", None)
-        results.update(dv_results)
         return results
 
     def search_string(
@@ -2019,11 +2106,11 @@ class SearchEngine:
     ) -> dict:
         """Search with the Zulia query-string syntax (search.parser).
 
-        Range conjuncts (``field:[a TO b]``, ``field>=v``) evaluate
-        against doc_map columns via a Catalyst-pushed predicate
-        semi-joined with the postings match set — the
-        IndexOrDocValuesQuery split (SetQueryHelper.java:45-106).
-        Everything else runs in the sharded postings kernel.
+        Ranges (``field:[a TO b]``, ``field>=v``), numeric sets and geo
+        leaves evaluate as doc-values masks inside the sharded postings
+        kernel (the IndexOrDocValuesQuery split,
+        SetQueryHelper.java:45-106), in any boolean position, with
+        score 0.0.
         """
         req = SearchRequest(
             qs=q, qf=tuple(qf), default_op=default_op, mm=mm,
@@ -2031,97 +2118,34 @@ class SearchEngine:
         )
         return self.search(req)
 
-    def _search_one(self, req: SearchRequest, fetch: str = "ids") -> dict:
-        """Route one request by its resolved shape (shared by
-        search() for both the qs= and clause models): range conjuncts
-        take the IndexOrDocValuesQuery split, nested/SHOULD doc-values
-        leaves the set-algebra path, everything else the sharded
-        postings kernel via search_many."""
-        _, tree = self._resolve_request(req)
-        if tree is not None:
-            try:
-                ranges = tree_ranges(tree)
-            except ParseError:
-                # doc-values leaves in nested/SHOULD positions:
-                # set-algebra evaluation (Lucene accepts range
-                # clauses anywhere)
-                return self._search_tree_mixed(tree, req, req.amount, req.start)
-            if ranges:
-                return self._search_tree_ranges(tree, req, ranges)
-        return self.search_many({"q": req}, fetch=fetch)["q"]
-
-    def _search_tree_ranges(self, tree, req: SearchRequest, ranges) -> dict:
-        """Range conjuncts: doc-values predicate over doc_map columns
-        semi-joined with the postings match set — the
-        IndexOrDocValuesQuery split (SetQueryHelper.java:45-106)."""
-        pred = self._range_predicate(ranges)
-        stripped = _strip_ranges(tree)
-        if stripped is None or not tree_has_positive_leaf(stripped):
-            # pure doc-values query: filter LIVE doc_map directly
-            # (tombstoned docs never resurface through ranges)
-            allowed = self._live_doc_map().filter(pred)
-            rows = (
-                allowed.orderBy(F.asc("shard"), F.asc("doc_id"))
-                .limit(req.start + req.amount)
-                .select("shard", "doc_id", "uniqueId")
-                .collect()
-            )
-            total = allowed.count()
-            topk = [
-                {"shard": int(r["shard"]), "doc_id": int(r["doc_id"]), "score": 0.0, "uniqueId": r["uniqueId"]}
-                for r in rows[req.start : req.start + req.amount]
-            ]
-            return {"totalHits": int(total), "topk": topk, "hitsExact": True}
-        sreq = SearchRequest(
-            qs=_TREE_SENTINEL, qf=req.qf, default_op=req.default_op, mm=req.mm,
-            amount=req.amount, start=req.start, similarities=req.similarities,
-        )
-        self._resolve_cache[
-            ("qs", _TREE_SENTINEL, sreq.qf, sreq.default_op, sreq.mm)
-        ] = stripped
-        return self.search_docvalues(sreq, pred, amount=req.amount)
-
-    def _range_predicate(self, ranges) -> str:
-        """RRange / RNumericSet conjuncts → one SQL predicate over
-        doc_map columns (numeric when the column is numeric, else
+    def _range_predicate(self, r) -> str:
+        """One RRange / RNumericSet / RGeo leaf → a BARE SQL predicate
+        over doc_map columns (numeric when the column is numeric, else
         string compare). Field-mapping aliases OR their expanded
         targets.
 
-        Null handling is OCCUR-dependent, and the shapes differ for a
-        scale reason: a positive conjunct emits the BARE predicate —
-        WHERE already treats NULL as false, and bare comparisons reach
-        the parquet scan as PushedFilters (row-group/page min-max
-        skipping; a coalesce() wrapper makes the whole filter opaque
-        to pushdown and forces a full doc_map scan — verified in
-        tests/test_plan_pushdown.py). Only MUST_NOT wraps each alt in
-        coalesce(..., false) before negating, so docs WITHOUT the
-        field are kept — Lucene MUST_NOT semantics; negated filters
-        can't prune min-max ranges anyway, so nothing is lost there."""
+        Bare comparisons reach the parquet scan as PushedFilters
+        (row-group/page min-max skipping; a coalesce() wrapper makes
+        the whole filter opaque to pushdown and forces a full doc_map
+        scan — verified in tests/test_plan_pushdown.py). So
+        :meth:`_dv_mask_frame` filters rows on the bare predicates and
+        wraps only its mask columns in coalesce(..., false): a doc
+        without the field matches no leaf, and MUST_NOT keeps it —
+        Lucene MUST_NOT semantics."""
         dtypes = dict(self.tables.doc_map.dtypes)
-        parts = []
-        for occur, r in ranges:
-            # lenient = pattern-expanded field list spanning types: a
-            # field the value can't parse for (or that isn't stored)
-            # matches nothing instead of failing the query
-            lenient = getattr(r, "lenient", False)
-            alts = []
-            for fld in r.fields:
-                try:
-                    alts.append(self._range_alt_sql(fld, r, dtypes))
-                except (ValueError, KeyError):
-                    if not lenient:
-                        raise
-                    alts.append("(1=0)")
-            if occur == "MUST_NOT":
-                # null-safe ONLY under negation: NOT coalesce(p, false)
-                # keeps docs without the field (Lucene MUST_NOT)
-                p = " OR ".join(f"coalesce({a}, false)" for a in alts)
-                parts.append(f"NOT ({p})")
-            else:
-                # bare predicates: NULL is false in a WHERE filter and
-                # the comparisons stay parquet-pushable
-                parts.append("(" + " OR ".join(alts) + ")")
-        return " AND ".join(parts)
+        # lenient = pattern-expanded field list spanning types: a field
+        # the value can't parse for (or that isn't stored) matches
+        # nothing instead of failing the query
+        lenient = getattr(r, "lenient", False)
+        alts = []
+        for fld in r.fields:
+            try:
+                alts.append(self._range_alt_sql(fld, r, dtypes))
+            except (ValueError, KeyError):
+                if not lenient:
+                    raise
+                alts.append("(1=0)")
+        return "(" + " OR ".join(alts) + ")"
 
     def _range_alt_sql(self, fld: str, r, dtypes: dict) -> str:
         """One field's SQL alternative for a range/set/geo leaf.
@@ -2225,45 +2249,13 @@ class SearchEngine:
         The entry point for aggregations: facets/stats join this match
         set against doc_map, the Spark equivalent of the reference's
         doc-at-a-time facet/stat pass over the intersected iterators
-        (AggregationHandler.java:256-281). Requires at least one
-        positive clause (a purely-negative match-all set should be
-        computed as doc_map anti-join instead).
+        (AggregationHandler.java:256-281). Doc-values leaves anywhere in
+        the tree are kernel masks, as in :meth:`search_many`. Requires
+        at least one positive clause (a purely-negative match-all set
+        should be computed as doc_map anti-join instead).
         """
         resolved, tree = self._resolve_request(req)
         if tree is not None:
-            try:
-                ranges = tree_ranges(tree)
-            except ParseError:
-                # nested/SHOULD doc-values leaves: set-algebra path, so
-                # facets/stats/percentiles accept them too
-                return self._match_tree_mixed(tree, req)
-            if ranges:
-                # range conjuncts take the IndexOrDocValuesQuery split
-                # (SetQueryHelper.java:45-106), same composition as
-                # search_string: doc-values predicate over doc_map
-                # columns semi-joined with the postings match set — so
-                # every aggregation surface built on match_ids
-                # (facets, stats, percentiles) accepts DATE/numeric
-                # ranges anywhere in the query, like the reference's
-                # filter queries (DateStringTest + StatTest compose)
-                pred = self._range_predicate(ranges)
-                allowed = self._live_doc_map().filter(pred).select("shard", "doc_id")
-                stripped = _strip_ranges(tree)
-                if stripped is None or not tree_has_positive_leaf(stripped):
-                    # pure doc-values match set: constant score, the
-                    # same contract as search_string's pure-range path
-                    return allowed.withColumn("score", F.lit(0.0))
-                sreq = SearchRequest(
-                    qs=_TREE_SENTINEL, qf=req.qf,
-                    default_op=req.default_op, mm=req.mm,
-                    amount=req.amount, start=req.start,
-                    similarities=req.similarities,
-                )
-                self._resolve_cache[
-                    ("qs", _TREE_SENTINEL, sreq.qf, sreq.default_op, sreq.mm)
-                ] = stripped
-                base = self.match_ids(sreq)
-                return base.join(allowed, ["shard", "doc_id"])
             if not tree_has_positive_leaf(tree):
                 raise ValueError("match_ids needs a positive clause")
             keys = tree_stat_keys(tree)
@@ -2272,15 +2264,16 @@ class SearchEngine:
                 raise ValueError("match_ids needs a positive clause; anti-join doc_map for pure negations")
             keys = iter_stat_keys(resolved)
         plan = self._plan(keys)
-        if plan is None:
+        dv_cols, dv_frame = self._dv_mask_frame([tree] if tree is not None else [])
+        if plan is None and dv_frame is None:
             raise ValueError("empty query")
-        idf_by_key, avgdl_by_key, cond = plan
+        idf_by_key, avgdl_by_key, cond = plan or ({}, {}, F.lit(False))
         kernel = _make_match_kernel(
             resolved, idf_by_key, avgdl_by_key, self.params, self._shard_counts,
-            self._tombstone_arrays(), tree=tree,
+            self._tombstone_arrays(), tree=tree, dv_cols=dv_cols,
         )
         scan = self._postings_scan(cond, _has_phrase(tree, resolved))
-        return scan.groupBy("shard").applyInPandas(kernel, MATCH_SCHEMA)
+        return self._apply_kernel(scan, dv_frame, kernel, MATCH_SCHEMA)
 
     @staticmethod
     def _facet_top_n(top_n: int) -> int | None:
@@ -2906,160 +2899,6 @@ class SearchEngine:
             "topk": [
                 {"shard": int(r["shard"]), "doc_id": int(r["doc_id"]), "score": float(r["score"]), "uniqueId": r["uniqueId"]}
                 for r in top
-            ],
-            "hitsExact": True,
-        }
-
-    def _match_tree_mixed(self, tree, req: SearchRequest) -> DataFrame:
-        """Match set for a tree whose doc-values leaves (ranges /
-        numeric sets / geo) sit in NESTED or SHOULD positions — shapes
-        the conjunct-split path (``tree_ranges``) rejects, but which
-        Lucene's BooleanQuery accepts anywhere
-        (IndexOrDocValuesQuery scorers compose like any other clause).
-
-        Set-algebra evaluation mirroring ``matcher.evaluate_tree``:
-        pure-postings subtrees run through the sharded kernel
-        unchanged (one kernel pass per maximal postings subtree); a
-        doc-values leaf becomes a live-doc_map filter with constant
-        score 0.0 (the same contract as the conjunct path); boolean
-        nodes combine child frames with one union + groupBy per node
-        — MUST = matched-children count equal to the MUST count,
-        SHOULD = matched count >= mm (>=1 without MUSTs), MUST_NOT =
-        anti-join — summing scores exactly as the matcher does and
-        applying the node boost. Scale: every combine is one hash
-        shuffle on (shard, doc_id); nothing collects to the driver.
-
-        Documented deviation: the float32 score rounding the kernel
-        applies at ITS root applies per postings subtree here, so
-        mixed-tree scores can differ from a hypothetical single-pass
-        evaluation in the last float32 ulp.
-        """
-
-        def dv_leaf(node) -> bool:
-            return isinstance(node, (RRangeT, _RNumericSetT, _RGeoT))
-
-        def kernel_frame(node) -> DataFrame:
-            sub = node if isinstance(node, RBool) else RBool(((_MUST, node),))
-            sreq = SearchRequest(
-                qs=_TREE_SENTINEL, qf=req.qf, default_op=req.default_op,
-                mm=0, amount=req.amount, similarities=req.similarities,
-            )
-            self._resolve_cache[
-                ("qs", _TREE_SENTINEL, sreq.qf, sreq.default_op, 0)
-            ] = sub
-            return self.match_ids(sreq)
-
-        def empty_frame() -> DataFrame:
-            spark = self.tables.doc_map.sparkSession
-            return spark.createDataFrame([], MATCH_SCHEMA)
-
-        def eval_node(node) -> DataFrame:
-            if dv_leaf(node):
-                pred = self._range_predicate([(_MUST, node)])
-                return (
-                    self._live_doc_map()
-                    .filter(pred)
-                    .select("shard", "doc_id")
-                    .withColumn("score", F.lit(0.0))
-                )
-            try:
-                # maximal subtree the conjunct path can run (pure
-                # postings, postings + top-conjunct dv, or pure dv —
-                # match_ids serves all three) → kernel
-                rs = tree_ranges(node)
-                if not rs and not tree_has_positive_leaf(node):
-                    # pure-negative postings subtree, NESTED: Lucene
-                    # matches nothing (a pure-dv subtree has no RLeaf
-                    # but is positive — rs non-empty covers it)
-                    return empty_frame()
-                if rs and all(o == _MUST_NOT for o, _ in rs) and not tree_has_positive_leaf(node):
-                    return empty_frame()  # only prohibited dv conjuncts
-                return kernel_frame(node)
-            except ParseError:
-                pass
-            assert isinstance(node, RBool)
-            musts, shoulds, nots = [], [], []
-            for occur, child in node.children:
-                if occur == _MUST:
-                    musts.append(eval_node(child))
-                elif occur == _MUST_NOT:
-                    nots.append(eval_node(child))
-                else:
-                    shoulds.append(eval_node(child))
-            # one union + one aggregation per occur class — a chain of
-            # joins would shuffle once per child instead
-            def tag_union(frames, col):
-                out = None
-                for i, f in enumerate(frames):
-                    t = f.select("shard", "doc_id", "score").withColumn(col, F.lit(i))
-                    out = t if out is None else out.unionByName(t)
-                return out
-
-            base = None
-            if musts:
-                mu = tag_union(musts, "_c").groupBy("shard", "doc_id").agg(
-                    F.sum("score").alias("_mscore"),
-                    F.count_distinct(F.col("_c")).alias("_mcnt"),
-                )
-                base = mu.filter(F.col("_mcnt") == len(musts))
-            if shoulds:
-                sh = tag_union(shoulds, "_c").groupBy("shard", "doc_id").agg(
-                    F.sum("score").alias("_sscore"),
-                    F.count_distinct(F.col("_c")).alias("_smatched"),
-                )
-                if base is not None:
-                    base = base.join(sh, ["shard", "doc_id"], "left")
-                    score = F.col("_mscore") + F.coalesce(F.col("_sscore"), F.lit(0.0))
-                    if node.mm > 0:
-                        base = base.filter(
-                            F.coalesce(F.col("_smatched"), F.lit(0)) >= node.mm
-                        )
-                else:
-                    need = node.mm if node.mm > 0 else 1
-                    base = sh.filter(F.col("_smatched") >= need)
-                    score = F.col("_sscore")
-            elif base is not None:
-                score = F.col("_mscore")
-            else:
-                return empty_frame()  # only prohibited children, nested
-            for nf in nots:
-                base = base.join(
-                    nf.select("shard", "doc_id"), ["shard", "doc_id"], "left_anti"
-                )
-            if node.boost != 1.0:
-                score = score * F.lit(node.boost)
-            return base.select("shard", "doc_id", score.alias("score"))
-
-        return eval_node(tree)
-
-    def _search_tree_mixed(self, tree, req: SearchRequest, amount: int, start: int) -> dict:
-        """Page a mixed-position doc-values tree: rank by (score desc,
-        shard, doc_id) like every other entry point."""
-        j = (
-            self._match_tree_mixed(tree, req)
-            .join(
-                self.tables.doc_map.select("shard", "doc_id", "uniqueId"),
-                ["shard", "doc_id"],
-            )
-            .persist()  # narrow 4-column frame; two actions below
-        )
-        try:
-            rows = (
-                j.orderBy(F.desc("score"), F.asc("shard"), F.asc("doc_id"))
-                .limit(start + amount)
-                .collect()
-            )
-            total = j.count()
-        finally:
-            j.unpersist()
-        return {
-            "totalHits": int(total),
-            "topk": [
-                {
-                    "shard": int(r["shard"]), "doc_id": int(r["doc_id"]),
-                    "score": float(r["score"]), "uniqueId": r["uniqueId"],
-                }
-                for r in rows[start : start + amount]
             ],
             "hitsExact": True,
         }
@@ -4064,8 +3903,8 @@ class SearchEngine:
 
     def _live_doc_map(self):
         """doc_map minus tombstoned docs — the Lucene liveDocs mask
-        for paths that bypass the postings kernels (pure doc-values
-        ranges, raw KNN): they must not resurface deletes the way
+        for paths that bypass the postings kernels (raw doc-values
+        predicates, raw KNN): they must not resurface deletes the way
         IndexReader.numDocs/liveDocs never would. Zero cost when
         nothing is deleted; otherwise a broadcast anti-join of the
         (shard, doc_id) tombstone set (already driver-resident, like
@@ -4098,13 +3937,8 @@ class SearchEngine:
     def _mark_tombstones(self, ids: list[str]) -> int:
         """Resolve uniqueIds → (shard, doc_id) and mark them deleted.
         Returns the number of NEWLY deleted docs."""
-        spark = self.tables.doc_map.sparkSession
-        ids_df = spark.createDataFrame([(u,) for u in ids], "uniqueId string")
-        rows = (
-            self.tables.doc_map.join(F.broadcast(ids_df), "uniqueId")
-            .select("shard", "doc_id")
-            .collect()
-        )
+        # a pushable IN filter: one scan job, like _attach_unique_ids
+        rows = self.tables.doc_map.filter(F.col("uniqueId").isin(ids)).select("shard", "doc_id").collect()
         marked = 0
         for r in rows:
             s = self._tombstones.setdefault(int(r["shard"]), set())
@@ -4998,15 +4832,17 @@ class SearchEngine:
 
     def _attach_unique_ids(self, topk: list[dict]) -> None:
         """Result-id → stored-doc join (DocumentScoredDocLeafHandler
-        fetch path): broadcast the tiny id set against doc_map."""
-        pairs = {(t["shard"], t["doc_id"]) for t in topk}
-        spark = self.tables.doc_map.sparkSession
-        ids = spark.createDataFrame(sorted(pairs), "shard int, doc_id long")
-        rows = (
-            self.tables.doc_map.join(F.broadcast(ids), ["shard", "doc_id"])
-            .select("shard", "doc_id", "uniqueId")
-            .collect()
-        )
+        fetch path): filter doc_map to the tiny id set."""
+        by_shard: dict[int, set[int]] = {}
+        for t in topk:
+            by_shard.setdefault(t["shard"], set()).add(t["doc_id"])
+        # a pushable (shard, doc_id IN …) filter is one scan job; a
+        # broadcast join of a locally built frame would take two
+        cond = None
+        for shard, docs in sorted(by_shard.items()):
+            c = (F.col("shard") == shard) & F.col("doc_id").isin(sorted(docs))
+            cond = c if cond is None else (cond | c)
+        rows = self.tables.doc_map.filter(cond).select("shard", "doc_id", "uniqueId").collect()
         lookup = {(int(r["shard"]), int(r["doc_id"])): r["uniqueId"] for r in rows}
         for t in topk:
             t["uniqueId"] = lookup.get((t["shard"], t["doc_id"]))

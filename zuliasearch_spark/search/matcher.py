@@ -147,6 +147,10 @@ def evaluate_tree(root, term_vectors, n: int, parity: bool, root_fixup: bool = T
     carry their own mm — Lucene setMinimumNumberShouldMatch — and
     mix +/- with bare terms).
 
+    Doc-values leaves (parser.RRange / RNumericSet / RGeo) are leaves
+    like any other: ``term_vectors(leaf, 0.0)`` returns their mask and
+    a zero score, so they compose in every boolean position.
+
     ``root_fixup``: a top-level query of only prohibited clauses
     matches everything else (the reference's MatchAll fix-up,
     ZuliaIndex.java:715-717); NESTED pure-negative groups match
@@ -174,7 +178,10 @@ def evaluate_tree(root, term_vectors, n: int, parity: bool, root_fixup: bool = T
                 mask |= m
                 score += np.where(m, s, 0.0) if (node.conj and cnt > 1) else s
             return mask, np.where(mask, score, 0.0)
-        assert isinstance(node, RBool)
+        if not isinstance(node, RBool):
+            # doc-values leaf (range / numeric set / geo): term_vectors
+            # returns its allowed-doc mask with score 0.0
+            return term_vectors(node, 0.0)
         mask = np.ones(n, dtype=bool)
         score = np.zeros(n, dtype=np.float64)
         should_cnt = None

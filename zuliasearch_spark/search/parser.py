@@ -770,15 +770,16 @@ class RBool:
     boost: float = 1.0
 
 
-@dataclass
+@dataclass(frozen=True)
 class RRange:
     """Doc-values range (field:[a TO b], IndexOrDocValuesQuery path,
-    SetQueryHelper.java:45-106): evaluated against doc_map columns by
-    a Catalyst-pushed predicate, not in the postings kernel. Only
-    valid as a top-level conjunct (MUST / MUST_NOT). ``fields`` is
-    the expanded field-mapping target list (FieldTypeUtil
-    .expandFields applies to query-side range fields too) — >1 field
-    ORs the per-field predicates."""
+    SetQueryHelper.java:45-106): a Catalyst-pushed predicate over
+    doc_map columns, evaluated as a per-shard allowed-doc mask inside
+    the postings kernel, so it composes like any other leaf in any
+    boolean position and scores 0.0. Frozen: the kernel looks up a
+    leaf's mask by value. ``fields`` is the expanded field-mapping
+    target list (FieldTypeUtil.expandFields applies to query-side
+    range fields too) — >1 field ORs the per-field predicates."""
 
     fields: tuple[str, ...]
     lo: str | None
@@ -794,18 +795,18 @@ class RRange:
     lenient: bool = False
 
 
-@dataclass
+@dataclass(frozen=True)
 class RNumericSet:
     """zl:ns(...) — ZuliaNumericSetQueryNode (SetQueryHelper
     .getNumericSetQuery:24-89): ``field ∈ {values}`` over numeric doc
-    values, evaluated as a Catalyst predicate like RRange. MUST_NOT
-    follows Lucene semantics (docs without the field are kept)."""
+    values, a kernel mask leaf like RRange. MUST_NOT follows Lucene
+    semantics (docs without the field are kept)."""
 
     fields: tuple[str, ...]
     values: tuple[str, ...]
 
 
-@dataclass
+@dataclass(frozen=True)
 class RGeo:
     """zl:geo / zl:geoBbox resolved to a doc-values predicate over a
     stored ``array<double> [lat, lon]`` column — the Spark analogue
@@ -815,6 +816,9 @@ class RGeo:
     kind: str  # "geo" | "geo_bbox"
     fields: tuple[str, ...]
     args: tuple[float, ...]
+
+
+DV_LEAVES = (RRange, RNumericSet, RGeo)
 
 
 def _meta_field(name: str) -> str:
@@ -839,6 +843,7 @@ def resolve_tree(
     expand_field=None,
     date_fields: frozenset[str] = frozenset(),
     all_fields: tuple[str, ...] = (),
+    pattern_point_fields: frozenset[str] = frozenset(),
 ):
     """Raw AST → resolved AST. ``expand_wildcard(field, regex)`` and
     ``expand_fuzzy(field, term, edits)`` enumerate the term
@@ -852,7 +857,9 @@ def resolve_tree(
     exists-union over them — MatchAllDocsQuery semantics for any doc
     with at least one indexed non-null field (a doc whose indexed
     fields are ALL null is invisible to this form, a documented
-    deviation from Lucene's segment-level match-all)."""
+    deviation from Lucene's segment-level match-all).
+    ``pattern_point_fields`` are the point fields a bare field PATTERN
+    probes: the configured ones among ``date_fields``."""
     if expand_field is None:
         expand_field = lambda f: (f,)  # noqa: E731
 
@@ -867,27 +874,18 @@ def resolve_tree(
         return expand_boosted_fields(tuple(default_fields), expand_field)
 
     def point_pattern_fields(pat: str) -> tuple[str, ...]:
-        """Doc-values-only point fields (stored numeric/date/bool
-        columns, executor._date_fields) matched by a bare field
-        PATTERN — the reference expands patterns against ALL
-        user-indexed fields including point-typed ones
+        """Configured doc-values-only point fields
+        (``pattern_point_fields``) matched by a bare field PATTERN —
+        the reference expands patterns against ALL user-indexed fields
+        including point-typed ones
         (ServerIndexConfigData.getMatchingIndexFields;
-        FieldWildcardTest), so ``*:2`` probes NUMERIC fields too.
-        Same ``*``-only pattern syntax as IndexConfig."""
+        FieldWildcardTest), so ``*:2`` probes NUMERIC fields too, but
+        never internal or unconfigured columns. Same ``*``-only
+        pattern syntax as IndexConfig."""
         if "*" not in pat:
             return ()
         prx = re.compile("^" + ".*".join(re.escape(p) for p in pat.split("*")) + "$")
-        # internal bookkeeping columns (engine ids, _z* meta/quantized
-        # columns) are structurally excluded, the same 5.3.1 rule that
-        # keeps them out of text-pattern expansion
-        # (FieldWildcardTest internalFieldsExcludedFromWildcardExpansion)
-        return tuple(
-            sorted(
-                f
-                for f in date_fields
-                if prx.match(f) and not f.startswith("_z") and f not in ("shard", "doc_id")
-            )
-        )
+        return tuple(sorted(f for f in pattern_point_fields if prx.match(f)))
 
     conj = default_op.upper() == "AND"
     if isinstance(node, Bool):
@@ -897,6 +895,7 @@ def resolve_tree(
                 resolve_tree(
                     c, analyze, default_fields, expand_wildcard, expand_fuzzy,
                     default_op, expand_field, date_fields, all_fields,
+                    pattern_point_fields,
                 ),
             )
             for occur, c in node.children
@@ -1172,40 +1171,18 @@ def tree_stat_keys(node) -> set[tuple[str, str]]:
     return out
 
 
-def tree_ranges(node, top=True):
-    """Collect RRange / RNumericSet leaves; raise if any sits below
-    the top level (the doc-values join can only apply conjunctively)."""
-    out = []
+def tree_dv_leaves(node) -> list:
+    """Every RRange / RNumericSet / RGeo leaf of a resolved tree, in
+    any boolean position."""
     if isinstance(node, RBool):
-        for occur, c in node.children:
-            if isinstance(c, (RRange, RNumericSet, RGeo)):
-                if not top:
-                    raise ParseError("ranges are only supported as top-level conjuncts")
-                if occur == SHOULD and len(node.children) > 1:
-                    raise ParseError("ranges are only supported as top-level conjuncts (MUST/MUST_NOT)")
-                out.append((occur, c))
-            else:
-                out.extend(tree_ranges(c, top=False))
-    return out
-
-
-def strip_ranges(node):
-    """Copy of the tree without its top-level RRange / RNumericSet
-    children (they become a doc-values predicate); None if nothing
-    remains."""
-    if not isinstance(node, RBool):
-        return node
-    kept = tuple(
-        (o, c) for o, c in node.children if not isinstance(c, (RRange, RNumericSet, RGeo))
-    )
-    if not kept:
-        return None
-    return RBool(kept, node.mm, node.boost)
+        return [leaf for _, c in node.children for leaf in tree_dv_leaves(c)]
+    return [node] if isinstance(node, DV_LEAVES) else []
 
 
 def tree_has_positive_leaf(node) -> bool:
+    """A doc-values leaf counts: it matches docs on its own."""
     if isinstance(node, RBool):
         return any(
             occur != MUST_NOT and tree_has_positive_leaf(c) for occur, c in node.children
         )
-    return isinstance(node, RLeaf)
+    return isinstance(node, (RLeaf, *DV_LEAVES))

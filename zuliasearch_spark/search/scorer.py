@@ -106,13 +106,3 @@ def bm25_max_impact(max_tf: int, min_dl: int, avgdl: float, params: Bm25Params) 
         params,
     )
     return float(scores[0])
-
-
-def sum_clause_scores(parts: list[np.ndarray], parity: bool) -> np.ndarray:
-    """Sum clause score arrays like Lucene: double accumulator, f32 out."""
-    if not parts:
-        return np.empty(0)
-    acc = np.zeros(parts[0].shape, dtype=np.float64)
-    for p in parts:
-        acc += p.astype(np.float64)
-    return acc.astype(F32) if parity else acc
